@@ -1845,10 +1845,16 @@ def cmd_dedup(args) -> int:
                 decisions.write.mode("overwrite").parquet(args.out)
                 print(f"decisions written to {args.out}")
             if args.apply_new:
-                new_fp = fp.join(
-                    decisions.where(F.col("status") == "new").select("id"),
-                    "id",
-                )
+                # freeze the new set on the driver (bounded by the batch)
+                # before the first write: the content append refreshes
+                # every cached plan over the index, so a lazy decisions
+                # join would re-evaluate for the bands write, see each new
+                # doc as its own exact dup, and append no band keys
+                new_ids = [
+                    r.id for r in decisions.where(F.col("status") == "new")
+                    .select("id").collect()
+                ]
+                new_fp = fp.where(F.col("id").isin(new_ids))
                 append_fingerprint_index(new_fp, args.index)
                 print(f"appended {counts.get('new', 0)} new fingerprints")
         finally:

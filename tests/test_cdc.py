@@ -60,6 +60,15 @@ def test_net_changes_last_writer_and_guards(spark):
         net_changes(bad, ["k"])
 
 
+def test_cdc_null_op_raises(spark):
+    """~isin() is NULL (not true) for a NULL op, which would slip past the
+    guard and then act as a DELETE downstream; the guard's explicit
+    isNull disjunct makes it raise instead."""
+    s = spark.createDataFrame([(1, "x", 1, None)], STREAM)
+    with pytest.raises(ValueError, match="unknown CDC op"):
+        net_changes(s, ["k"])
+
+
 def test_apply_cdc_requires_full_row_image(spark):
     base = _base(spark)
     partial = spark.createDataFrame(

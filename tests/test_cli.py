@@ -1279,6 +1279,9 @@ def test_cli_dedup_lifecycle_end_to_end(spark, sf_smoke, tmp_path, capsys):
     assert "dry run" in cap.err
 
     out = str(tmp_path / "decisions")
+    from database_migration_spark.operators.dedup import read_index_meta
+
+    bands_before = spark.read.parquet(f"{index}/bands").count()
     rc = main(["dedup", "probe", "--index", index, "--corpus", batch2,
                "--out", out, "--apply-new"])
     cap = capsys.readouterr()
@@ -1286,6 +1289,21 @@ def test_cli_dedup_lifecycle_end_to_end(spark, sf_smoke, tmp_path, capsys):
     assert "new: 10" in cap.out and "appended 10 new fingerprints" in cap.out
     got = {r.status for r in spark.read.parquet(out).collect()}
     assert got == {"new"}
+    # --apply-new grows BOTH sub-indexes: every new doc adds one band key
+    # per band, so a near copy of an appended doc is found by the next
+    # probe (a bands-less append would leave it looking new)
+    assert spark.read.parquet(f"{index}/bands").count() == (
+        bands_before + 10 * read_index_meta(index)["bands"]
+    )
+    near = str(tmp_path / "near")
+    d.where("doc_id = 42").selectExpr(
+        "doc_id + 90000 AS doc_id",
+        "concat(substring(text, 1, length(text) - 8), 'qqqqqqqq') AS text",
+    ).write.parquet(f"{near}/documents.parquet")
+    rc = main(["dedup", "probe", "--index", index, "--corpus", near,
+               "--dry-run"])
+    cap = capsys.readouterr()
+    assert rc == 0 and "near_dup: 1" in cap.out
 
     # the appended docs are now exact dups on re-probe
     rc = main(["dedup", "probe", "--index", index, "--corpus", batch2,

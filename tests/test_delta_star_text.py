@@ -40,7 +40,7 @@ def test_strategy_decision(spark, sf_smoke):
     # PK + delta col -> delta load
     p = plan_sync(orders, target, ("o_orderkey",), "o_orderdate")
     assert p.strategy is SyncStrategy.DELTA_LOAD_MERGE
-    assert p.watermark is not None
+    assert p.watermark == target.agg(F.max("o_orderdate")).first()[0]
     assert any(">=" in s for s in p.statements)  # at-least-once boundary
 
 

@@ -355,31 +355,15 @@ def test_classifier_is_joinless_single_pass(spark):
     assert len(exchanges) <= 1, exchanges
 
 
-def test_fan_out_decision_memo(spark, monkeypatch):
-    """The fan decision is memoized per (app, analyzed-plan semanticHash,
-    target): an identical relation re-built in the same session must not
-    re-pay the plan->RDD partition probe, a DIFFERENT relation must decide
-    for itself, and the memo changes economics only - rows and the
-    repartition itself are unchanged."""
+def test_fan_out_decision(spark):
+    """A 1-partition input fans to defaultParallelism with its rows
+    unchanged; ``min_bytes`` keeps a known-small input unfanned."""
     from database_migration_spark.functions import parallel
 
-    parallel._FAN_DECISION.clear()
-    calls = []
-    real = parallel._should_fan
-
-    def counting(df, target, min_bytes=0):
-        calls.append(target)
-        return real(df, target, min_bytes)
-
-    monkeypatch.setattr(parallel, "_should_fan", counting)
-    docs = Q.table(spark, SF, "documents").select("doc_id", "text")
-    a = parallel.fan_out(docs)
-    assert len(calls) == 1
-    # same logical plan, fresh DataFrame object: memo hit, no second probe
-    docs2 = Q.table(spark, SF, "documents").select("doc_id", "text")
-    b = parallel.fan_out(docs2)
-    assert len(calls) == 1
-    # a different plan decides independently
-    parallel.fan_out(docs.where("doc_id >= 0"))
-    assert len(calls) == 2
-    assert a.count() == docs.count() and b.rdd.getNumPartitions() > 1
+    docs = Q.table(spark, SF, "documents").select("doc_id", "text").coalesce(1)
+    target = spark.sparkContext.defaultParallelism
+    fanned = parallel.fan_out(docs)
+    assert fanned.rdd.getNumPartitions() == target
+    assert sorted(fanned.collect()) == sorted(docs.collect())
+    kept = parallel.fan_out(docs, min_bytes=1 << 40)
+    assert kept.rdd.getNumPartitions() == 1

@@ -125,35 +125,18 @@ def test_reserved_cell_column_raises(spark, pi):
         range_join(points.withColumn("_cell", F.lit(1)), intervals, "p", "lo", "hi")
 
 
-def test_default_width_memo_gating(spark, pi, monkeypatch):
-    """r12: the default-width scalar scan memoizes ONLY when max_cell is
-    None (width is pure economics there); with max_cell set the width
-    picks which cells get capped, so the live scan must stay."""
+def test_default_width_matches_brute_force(spark, pi):
+    """The default width comes from a live average-span scan on every
+    build; with or without a cell cap the result equals the brute-force
+    non-equi join on this fixture (no cell exceeds the cap)."""
     points, intervals = pi
     brute = _brute(points, intervals)
-
-    calls = {"memo": 0}
-    from database_migration_spark.functions.parallel import memo_first_row
-
-    def counting_memo(df):
-        calls["memo"] += 1
-        return memo_first_row(df)
-
-    monkeypatch.setattr(
-        "database_migration_spark.functions.parallel.memo_first_row",
-        counting_memo,
-    )
-    # plain default width: memoized, repeat-stable, exact
-    for _ in range(2):
+    for max_cell in (None, 10):
         got = {
             (r["pid"], r["iid"])
             for r in range_join(
-                points, intervals, "p", "lo", "hi", keys=["k"]
+                points, intervals, "p", "lo", "hi", keys=["k"],
+                max_cell=max_cell,
             ).collect()
         }
         assert got == brute
-    assert calls["memo"] == 2  # routed through the memo both builds
-    # max_cell set: must NOT consult the memo (live .first() scan)
-    before = calls["memo"]
-    range_join(points, intervals, "p", "lo", "hi", keys=["k"], max_cell=10)
-    assert calls["memo"] == before
