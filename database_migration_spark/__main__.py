@@ -765,8 +765,6 @@ def cmd_scd2(args) -> int:
     Bootstraps on first run; each later run closes changed entities' open
     versions and opens new ones. The version timestamp is --ts or the
     previous maximum valid_from + 1 (a BIGINT version counter)."""
-    import os
-
     from database_migration_spark.operators.scd2 import (
         scd2_bootstrap,
         scd2_merge,
@@ -806,7 +804,7 @@ def cmd_scd2(args) -> int:
         affected_partitions,
         publish_parquet,
         resolve_partitions,
-        store_has_partitions,
+        store_exists,
     )
 
     try:
@@ -826,10 +824,9 @@ def cmd_scd2(args) -> int:
 
         source = source.persist(StorageLevel.MEMORY_AND_DISK)
         affected = affected_partitions(source, keys, n_pt)
-        exists = store_has_partitions(args.target)
     else:
         affected = None
-        exists = os.path.exists(args.target)
+    exists = store_exists(args.target)
     if not exists:
         ts = args.ts if args.ts is not None else 0
         dim = scd2_bootstrap(source.select(*keys, *attrs), keys, attrs, ts)
@@ -1461,15 +1458,13 @@ def cmd_cdc(args) -> int:
     if args.dry_run:
         print("-- dry run; target untouched", file=sys.stderr)
         return 0
-    import os
-
     from pyspark.sql import functions as F
 
     from database_migration_spark.functions.io import (
         PT_COL,
         publish_parquet,
         resolve_partitions,
-        store_has_partitions,
+        store_exists,
     )
 
     try:
@@ -1490,10 +1485,9 @@ def cmd_cdc(args) -> int:
 
         events = events.persist(StorageLevel.MEMORY_AND_DISK)
         affected = affected_partitions(events, keys, n_pt)
-        exists = store_has_partitions(args.target)
     else:
         affected = None
-        exists = os.path.exists(args.target)
+    exists = store_exists(args.target)
     if exists:
         base = spark.read.parquet(args.target)
         if n_pt is not None:
@@ -1530,8 +1524,7 @@ def cmd_cdc(args) -> int:
     # meta-only directory, so count it as zero instead of crashing
     n = (
         spark.read.parquet(args.target).count()
-        if n_pt is None or store_has_partitions(args.target)
-        else 0
+        if store_exists(args.target) else 0
     )
     print(f"target now has {n} rows")
     return 0
@@ -1579,6 +1572,11 @@ def cmd_dedup(args) -> int:
 
     from pyspark.sql import functions as F
 
+    from database_migration_spark.functions.io import (
+        recover,
+        swap_dir,
+        swap_partition_dirs,
+    )
     from database_migration_spark.operators.dedup import (
         append_fingerprint_index,
         compact_partitioned,
@@ -1864,7 +1862,6 @@ def cmd_dedup(args) -> int:
     if args.action == "forget":
         from database_migration_spark.operators.dedup import (
             delete_rows_partitioned,
-            swap_partitions,
         )
 
         sub_ixs = _dedup_sub_indexes(args.index)
@@ -1890,6 +1887,7 @@ def cmd_dedup(args) -> int:
         total_deleted = 0
         for sub_ix in sub_ixs:
             src = f"{args.index}/{sub_ix}"
+            recover(src)  # a crashed forget left a bucket moved aside
             staging = src + ".forget"
             # the sub-indexes bucket on CONTENT/band-key hashes, not on
             # the id, so the locate pass is the column-pruned
@@ -1897,7 +1895,7 @@ def cmd_dedup(args) -> int:
             res = delete_rows_partitioned(
                 spark, src, staging, ids, "sid", "bucket"
             )
-            swap_partitions(src, staging, res["partitions"], "bucket")
+            swap_partition_dirs(src, staging, res["partitions"], "bucket")
             shutil.rmtree(staging, ignore_errors=True)
             total_deleted += res["rows_deleted"]
             print(f"{sub_ix}: {res['rows_deleted']} rows dropped from "
@@ -1916,13 +1914,10 @@ def cmd_dedup(args) -> int:
         return 2
     for sub_ix in sub_ixs:
         src = f"{args.index}/{sub_ix}"
+        recover(src)  # a crashed forget left a bucket moved aside
         staging = src + ".compact"
         compact_partitioned(spark, src, staging)
-        old = src + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(src, old)
-        os.rename(staging, src)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(staging, src)
         n_files = sum(
             len([f for f in files if f.endswith(".parquet")])
             for _, _, files in os.walk(src)
@@ -2447,28 +2442,28 @@ def cmd_ann(args) -> int:
               f"normalized={do_norm}")
         return 0
 
+    # every other action works on a built index: its stored meta carries
+    # the geometry and the normalization choice
+    from database_migration_spark.functions.io import read_meta, swap_dir
+
+    meta = read_meta(args.index, S.ANN_META)
+    if meta is None:
+        print(f"error: no ANN index at {args.index} "
+              "(run `ann build` first)", file=sys.stderr)
+        return 2
+
     if args.action == "compact":
         # append epochs add one file per touched cell directory; compact
         # to one file per cell and rename-swap (the dedup compact dance)
-        import shutil
-
         from database_migration_spark.operators.dedup import (
             compact_partitioned,
         )
 
-        if not os.path.exists(os.path.join(args.index, "_ann_meta.json")):
-            print(f"error: no ANN index at {args.index} "
-                  "(run `ann build` first)", file=sys.stderr)
-            return 2
         for sub_ix in ("codes", "vectors"):
             src = f"{args.index}/{sub_ix}"
             staging = src + ".compact"
             compact_partitioned(spark, src, staging, partition_col="cell")
-            old = src + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(src, old)
-            os.rename(staging, src)
-            shutil.rmtree(old, ignore_errors=True)
+            swap_dir(staging, src)
             n_files = sum(
                 len([f for f in files if f.endswith(".parquet")])
                 for _, _, files in os.walk(src)
@@ -2481,15 +2476,9 @@ def cmd_ann(args) -> int:
             ivf_pq_index_drift,
         )
 
-        if not os.path.exists(os.path.join(args.index, "_ann_meta.json")):
-            print(f"error: no ANN index at {args.index} "
-                  "(run `ann build` first)", file=sys.stderr)
-            return 2
         df = table_df(args.corpus)
         if df is None:
             return 2
-        with open(os.path.join(args.index, "_ann_meta.json")) as fh:
-            meta = json.load(fh)
         corpus = normalized(df) if meta.get("normalized") else df.select(
             args.id_col, args.vec_col
         )
@@ -2505,13 +2494,6 @@ def cmd_ann(args) -> int:
             append_ivf_pq_index,
         )
 
-        meta_path = os.path.join(args.index, "_ann_meta.json")
-        if not os.path.exists(meta_path):
-            print(f"error: no ANN index at {args.index} "
-                  "(run `ann build` first)", file=sys.stderr)
-            return 2
-        with open(meta_path) as fh:
-            meta = json.load(fh)
         df = table_df(args.corpus)
         if df is None:
             return 2
@@ -2533,13 +2515,6 @@ def cmd_ann(args) -> int:
         return 0
 
     # search
-    meta_path = os.path.join(args.index, "_ann_meta.json")
-    if not os.path.exists(meta_path):
-        print(f"error: no ANN index at {args.index} "
-              "(run `ann build` first)", file=sys.stderr)
-        return 2
-    with open(meta_path) as fh:
-        meta = json.load(fh)
     df = table_df(args.queries)
     if df is None:
         return 2

@@ -1,25 +1,35 @@
-"""Shared parquet publish step for self-referential rewrites.
+"""The store protocol: every persistent store in the repo commits here.
 
 A DataFrame whose lineage READS ``path`` cannot be written back to
 ``path`` directly: the first commit deletes input files the remaining
 tasks still need (Spark's self-overwrite race). Every incremental
 operator that maintains a plain-parquet store therefore stages to a
-sibling path and swaps it into the target — one protocol, one
-implementation (round-6 review: five hand-rolled copies had accumulated;
-a fix to the dance must propagate to all of them).
+sibling path and swaps it into the target. Three pieces, one copy each:
 
-The swap itself is a DIRECTORY RENAME, not a re-read + overwrite: an
-overwrite of ``path`` deletes the previous generation file-by-file before
-the new one is fully written, so a crash mid-overwrite shreds the
-accumulated state — fatal for read-modify-write targets like
-``stream_cdc_apply``'s (_seq fences and delete tombstones live in the
-target; the epoch replay then runs against a broken base). With the
-rename swap the previous generation stays intact until the new one is
-complete; the only crash window is between the two renames, which leaves
-BOTH generations on disk (``path`` briefly absent, ``path + ".old"``
-recoverable) instead of neither. Local-path staging is the norm here
-(staging is always a sibling of ``path``); a non-local path falls back to
-the legacy re-read + overwrite, documented as weaker.
+- :func:`write_meta` / :func:`read_meta`: a store's JSON metadata. The
+  write goes to a temp file and lands with ``os.replace``, so a crash
+  leaves the previous meta or the new one, never a truncated file.
+- :func:`swap_dir`: a DIRECTORY RENAME, not a re-read + overwrite (an
+  overwrite deletes the previous generation file-by-file before the new
+  one is written, so a crash shreds read-modify-write state such as
+  ``stream_cdc_apply``'s _seq fences). ``dst`` moves to a hidden aside
+  (``.<name>.aside``), ``src`` renames to ``dst``, the aside is dropped.
+  A crash between the two renames leaves ``dst`` absent and the previous
+  generation in the aside. A delete (absent ``src``) renames ``dst`` to
+  a hidden trash name first. Live data is never ``rmtree``d.
+- :func:`recover` / :func:`store_exists`: recovery on entry. An aside
+  whose ``dst`` is absent is restored; one whose ``dst`` exists is
+  dropped, as is any trash. ``swap_dir``, ``read_meta`` and
+  ``store_exists`` run it first,
+  so a crashed commit rolls back to the previous generation before any
+  read-modify-write caller looks at the store, and the replay redoes it.
+
+Asides start with ``.``: Spark's file index and
+``ParquetSource.list_tables`` skip such names, so a crashed swap never
+shows up as a partition value or a phantom table. Local-path staging is
+the norm here (staging is always a sibling of ``path``); a non-local
+path in :func:`publish_parquet` falls back to the legacy re-read +
+overwrite, documented as weaker.
 
 At scale a transactional table format (Delta/Iceberg MERGE INTO) replaces
 this entirely.
@@ -27,25 +37,99 @@ this entirely.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame
 
+_ASIDE = ".aside"  # the previous generation while a swap is in flight
+_TRASH = ".trash"  # a deleted generation, dropped unconditionally
+
+
+def _hidden(dst: str, suffix: str) -> str:
+    head, tail = os.path.split(os.path.normpath(dst))
+    return os.path.join(head, f".{tail}{suffix}")
+
+
+def _settle(dst: str) -> None:
+    trash, aside = _hidden(dst, _TRASH), _hidden(dst, _ASIDE)
+    if os.path.exists(trash):
+        shutil.rmtree(trash)
+    if os.path.exists(aside):
+        if os.path.exists(dst):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, dst)
+
+
+def recover(path: str) -> None:
+    """Settle every interrupted :func:`swap_dir` on ``path`` and on its
+    children: an aside whose ``dst`` is absent is restored (the commit
+    rename never ran), an aside whose ``dst`` exists is dropped (only the
+    cleanup was lost), and a trash dir is dropped."""
+    _settle(path)
+    if not os.path.isdir(path):
+        return
+    for e in os.listdir(path):
+        for suffix in (_ASIDE, _TRASH):
+            if e.startswith(".") and e.endswith(suffix):
+                _settle(os.path.join(path, e[1 : -len(suffix)]))
+
+
+def swap_dir(src: str, dst: str) -> None:
+    """Replace ``dst`` with ``src`` by renames. ``dst`` moves aside, then
+    ``src`` renames into place (the commit), then the aside is dropped.
+    An absent ``src`` deletes ``dst``: it moves to a trash name (the
+    commit) and is dropped, so a crash mid-drop can never restore a
+    half-deleted directory."""
+    recover(dst)
+    if not os.path.exists(src):
+        if os.path.exists(dst):
+            trash = _hidden(dst, _TRASH)
+            os.rename(dst, trash)
+            shutil.rmtree(trash)
+        return
+    aside = _hidden(dst, _ASIDE)
+    if os.path.exists(dst):
+        os.rename(dst, aside)
+    os.rename(src, dst)
+    if os.path.exists(aside):
+        shutil.rmtree(aside)
+
+
+def write_meta(path: str, name: str, obj: dict) -> None:
+    """Atomically write ``obj`` as JSON to ``<path>/<name>``: a temp file,
+    fsync, then ``os.replace`` (a crash leaves the old meta or the new
+    one, never a truncated file)."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, name + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(path, name))
+
+
+def read_meta(path: str, name: str) -> "dict | None":
+    """``<path>/<name>`` as a dict, or None when the store has no such
+    meta. Recovers ``path`` first."""
+    recover(path)
+    p = os.path.join(path, name)
+    if not os.path.exists(p):
+        return None
+    with open(p) as fh:
+        return json.load(fh)
+
 
 def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
-    """Stage ``df`` to ``staging``, swap into ``path`` (directory rename —
-    the previous generation survives until the new one is committed), drop
-    the old generation. ``staging`` must not be inside ``path``."""
+    """Stage ``df`` to ``staging`` and :func:`swap_dir` it into ``path``
+    (the previous generation survives until the new one is committed).
+    ``staging`` must not be inside ``path``."""
     spark = df.sparkSession
     df.write.mode("overwrite").parquet(staging)
     if os.path.isdir(staging):
-        old = path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(staging, path)
     else:
         # non-local filesystem (scheme-qualified path): no POSIX rename —
         # re-read the staged copy (breaking the lineage) and overwrite.
@@ -61,7 +145,7 @@ def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
 # FULL target rewrite per epoch — measured flat 6-7 s at 1.5 M keys, but
 # proportional to |target|, which at 100 TB is the wrong shape. The cure
 # the repo already proved on the dedup side (delete_rows_partitioned /
-# swap_partitions): lay the target out partitionBy(key-hash bucket), derive
+# swap_partition_dirs): lay the target out partitionBy(key-hash bucket), derive
 # the TOUCHED buckets from the delta alone, rewrite + swap only those.
 # Untouched partition directories keep their file identity; per-epoch cost
 # tracks |delta| + |touched partitions|, not |target|.
@@ -93,32 +177,22 @@ def write_target_meta(path: str, keys: list, n_partitions: int) -> None:
     crash between data and meta left a partitioned store that
     resolve_partitions mis-diagnosed as "written unpartitioned" and the
     epoch replay could never make progress. With meta-first, a
-    meta-with-no-partitions store is simply EMPTY (store_has_partitions
-    is the existence test) and the replayed bootstrap proceeds; a crash
-    mid-swap leaves a prefix of partitions, which the replay re-fences."""
-    import json
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, TARGET_META), "w") as fh:
-        json.dump(
-            {
-                "partition_col": PT_COL,
-                "partitions": int(n_partitions),
-                "keys": list(keys),
-                "hash": "pmod(md5_long(concat_ws(0x1f, keys)), partitions)",
-            },
-            fh,
-        )
+    meta-with-no-partitions store is simply EMPTY (:func:`store_exists`
+    is the existence test) and the replayed bootstrap proceeds."""
+    write_meta(
+        path,
+        TARGET_META,
+        {
+            "partition_col": PT_COL,
+            "partitions": int(n_partitions),
+            "keys": list(keys),
+            "hash": "pmod(md5_long(concat_ws(0x1f, keys)), partitions)",
+        },
+    )
 
 
 def read_target_meta(path: str) -> "dict | None":
-    import json
-
-    p = os.path.join(path, TARGET_META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
+    return read_meta(path, TARGET_META)
 
 
 def resolve_partitions(
@@ -157,7 +231,7 @@ def resolve_partitions(
 
 def _require_local(*paths: str) -> None:
     """RAISE on a scheme-qualified (non-local) path anywhere in the
-    surgical publish protocol. The swap is os.rename/shutil.move — on an
+    surgical publish protocol. The swap is os.rename (swap_dir) — on an
     object-store target the epoch slice would stage remotely while the
     swap moves nothing locally, and the epoch would "commit" having
     changed no data: SILENT LOSS, strictly worse than a crash (judge
@@ -182,25 +256,22 @@ def _require_local(*paths: str) -> None:
 def swap_partition_dirs(
     path: str, staging: str, partitions: list, partition_col: str = PT_COL
 ) -> None:
-    """Commit a staged partition rewrite: replace each affected
+    """Commit a staged partition rewrite: :func:`swap_dir` each affected
     ``<partition_col>=<value>`` directory of ``path`` with the staging one
     (local-FS rename; the object-store analogue is the table format's
     replace-partitions commit). Partitions not listed are untouched —
     their files keep their identity, which is the whole point. A missing
     staging subdirectory is a full-partition delete (the rewrite kept
-    zero rows). Crash mid-swap leaves a PREFIX of the partitions swapped,
-    each internally consistent — safe for stores whose epoch replay is
+    zero rows). A crash mid-swap leaves a prefix of the partitions on the
+    new generation and at most one partition moved aside; :func:`recover`
+    restores that one, so the next reader sees each partition at one
+    generation or the other — safe for stores whose epoch replay is
     idempotent per partition (CDC fences, SCD2 merge)."""
     _require_local(path, staging)
     os.makedirs(path, exist_ok=True)  # bootstrap: target root may not exist
     for p in partitions:
         sub = f"{partition_col}={p}"
-        dst = os.path.join(path, sub)
-        src = os.path.join(staging, sub)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        if os.path.exists(src):
-            shutil.move(src, dst)
+        swap_dir(os.path.join(staging, sub), os.path.join(path, sub))
 
 
 def publish_partitions(
@@ -248,7 +319,7 @@ def publish_surgical(
       isn't created (the caller reports it).
     - A real bootstrap writes ``_target_meta.json`` BEFORE the data, so
       a crash between the two replays cleanly (meta-only dir == empty
-      store by the ``store_has_partitions`` existence test)."""
+      store by the :func:`store_exists` existence test)."""
     _require_local(path, staging)  # before the meta write creates "s3:/…"
     if bootstrapping and result.isEmpty():
         return False
@@ -263,13 +334,14 @@ def publish_surgical(
     return True
 
 
-def store_has_partitions(path: str) -> bool:
-    """Whether a key-hash-partitioned store holds any data yet: at least
-    one ``_pt=*`` directory. The EXISTENCE test for partitioned targets —
-    a directory holding only ``_target_meta.json`` is an empty store
-    mid-bootstrap (meta writes first), not a readable dataset."""
-    if not os.path.isdir(path):
-        return False
+def store_exists(path: str) -> bool:
+    """Whether ``path`` holds a readable store, after :func:`recover`.
+    A key-hash-partitioned store (one with ``_target_meta.json``) exists
+    once it holds a ``_pt=*`` directory — a directory holding only the
+    meta is an empty store mid-bootstrap (meta writes first), not a
+    readable dataset. Any other store exists when its directory does."""
+    if read_target_meta(path) is None:  # read_meta recovers first
+        return os.path.isdir(path)
     return any(e.startswith(f"{PT_COL}=") for e in os.listdir(path))
 
 

@@ -33,7 +33,10 @@ from database_migration_spark.functions.hashing import (
     minhash_permuted_sql,
     permutation_params,
 )
+from database_migration_spark.functions.io import read_meta, write_meta
 from database_migration_spark.functions.text_exprs import char_shingles, normalize_text
+
+INDEX_META = "_index_meta.json"
 
 
 def exact_dedup(
@@ -1268,34 +1271,16 @@ def write_fingerprint_index(
     with the same ones or band keys never collide).
     """
     _write_fingerprint_index(store_fp, path, num_perm, bands, buckets, "overwrite")
-    _write_index_meta(path, num_perm, bands, buckets, extra)
-
-
-def _write_index_meta(
-    path: str, num_perm: int, bands: int, buckets: int, extra: dict | None = None
-) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
     meta = {"num_perm": num_perm, "bands": bands, "buckets": buckets}
     meta.update(extra or {})
-    with open(os.path.join(path, "_index_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_meta(path, INDEX_META, meta)
 
 
 def read_index_meta(path: str) -> dict | None:
     """The stored layout parameters of a fingerprint index, or None for an
     index written before the metadata existed (callers then fall back to
     their explicit/default parameters — the legacy contract)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "_index_meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as fh:
-        return json.load(fh)
+    return read_meta(path, INDEX_META)
 
 
 def _resolve_index_params(
@@ -1478,16 +1463,11 @@ def write_hamming_index(
     ``max_hamming`` reads different chunk offsets and silently misses
     every duplicate). ``extra`` records signature provenance (the CLI
     stores the payload hash kind there)."""
-    import json
-    import os
-
     _write_hamming_index(sigs, path, bits, max_hamming, buckets, "overwrite")
-    os.makedirs(path, exist_ok=True)
     meta = {"kind": "hamming", "bits": bits, "max_hamming": max_hamming,
             "buckets": buckets}
     meta.update(extra or {})
-    with open(os.path.join(path, "_index_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_meta(path, INDEX_META, meta)
 
 
 def _write_hamming_index(
@@ -1705,9 +1685,10 @@ def delete_rows_partitioned(
     partition directories at file listing — PartitionFilters, asserted in
     tests). Untouched partitions are never read or written. The caller
     then swaps the affected partition directories into place
-    (:func:`swap_partitions` — local-FS move here; at scale the same
-    protocol is the object-store/table-format atomic partition commit,
-    e.g. rename-into-place or an Iceberg/Delta replace-partitions commit).
+    (``functions.io.swap_partition_dirs`` — local-FS rename here; at
+    scale the same protocol is the object-store/table-format atomic
+    partition commit, e.g. rename-into-place or an Iceberg/Delta
+    replace-partitions commit).
 
     Returns {"partitions": [...], "rows_deleted": n, "rows_kept": n}
     so the caller can audit the pass before swapping.
@@ -1746,7 +1727,7 @@ def delete_rows_partitioned(
     # batch purged every row of its partitions (the commit then holds only
     # _SUCCESS — schema inference would fail with UNABLE_TO_INFER_SCHEMA,
     # and a local-FS existence probe would silently miscount on hdfs/s3a);
-    # swap_partitions handles the missing staging subdirectory as a
+    # swap_partition_dirs handles the missing staging subdirectory as a
     # full-partition delete.
     rows_kept = (
         spark.read.schema(pruned.schema).parquet(staging).count() if affected else 0
@@ -1756,20 +1737,6 @@ def delete_rows_partitioned(
         "rows_deleted": pruned.count() - rows_kept,
         "rows_kept": rows_kept,
     }
-
-
-def swap_partitions(path: str, staging: str, partitions: list, partition_col: str = "bucket") -> None:
-    """Commit a :func:`delete_rows_partitioned` staging area: replace each
-    affected ``<partition_col>=<value>`` directory of ``path`` with the
-    staging one (local-FS rename; the object-store analogue is the
-    partition-replace commit of the table format in use). Partitions not
-    listed are untouched — their files keep their identity, which is the
-    whole point of the targeted pass. (Delegates to the shared
-    ``functions.io.swap_partition_dirs`` — one swap protocol repo-wide,
-    the publish_parquet single-implementation rule.)"""
-    from database_migration_spark.functions.io import swap_partition_dirs
-
-    swap_partition_dirs(path, staging, partitions, partition_col)
 
 
 def line_occurrences(

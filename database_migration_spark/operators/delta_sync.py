@@ -227,8 +227,7 @@ def sync_table(
     transactional table format the same plan calls MERGE INTO and touches
     only matched files.
     """
-    import os
-
+    from database_migration_spark.functions.io import store_exists
     from database_migration_spark.sources.parquet_source import ParquetSource
 
     cat = adapter.scan_catalog("%", table, include_keys=True)
@@ -251,14 +250,10 @@ def sync_table(
     keys = tuple(by_upper.get(k.upper(), k) for k in keys or ()) or None
 
     tgt_src = ParquetSource(spark, target_root)
-    exists = (
-        os.path.isdir(target_root) and meta.table in tgt_src.list_tables()
-    )
-    if exists:
-        path = tgt_src.table_path(meta.table)
+    path = tgt_src.table_path(meta.table)
+    if store_exists(path):
         target = tgt_src.read(meta.table)
     else:
-        path = os.path.join(target_root, meta.table)
         target = spark.createDataFrame([], source.schema)
 
     delta_type = next(

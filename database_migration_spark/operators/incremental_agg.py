@@ -196,11 +196,11 @@ def watermark_refresh(
     Returns ``{"applied_rows": n, "watermark": new_wm}`` — applied_rows
     is 0 when the delta is empty (state untouched).
     """
-    import os
-
     from pyspark import StorageLevel
 
-    exists = os.path.exists(state_path)
+    from database_migration_spark.functions.io import store_exists
+
+    exists = store_exists(state_path)
     if exists:
         stored = spark.read.parquet(state_path)
         wm = stored.select(F.max("_wm").alias("w")).first()["w"]

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions.io import read_meta, write_meta
+
 MAX_KEY_BITS = 62  # z-key must stay a nonnegative signed-64 value
 LAYOUT_META = "_layout_meta.json"
 
@@ -225,7 +227,7 @@ def zorder_write(
     # run/epoch fence must land with the descriptor, not in a second
     # write (a crash between two writes reopens the replay window)
     desc.update(extra_meta or {})
-    _write_layout_meta(path, desc)
+    write_meta(path, LAYOUT_META, desc)
     return desc
 
 
@@ -290,19 +292,6 @@ def _footer_rows(path: str) -> int:
             )
         )
     )
-
-
-def _write_layout_meta(path: str, desc: dict) -> None:
-    """Atomic meta commit: temp sibling + os.replace — a crash mid-dump
-    must never leave a truncated ``_layout_meta.json`` that breaks every
-    later append (the publish_parquet stage-and-rename convention)."""
-    import json
-    import os
-
-    tmp = os.path.join(path, LAYOUT_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(desc, fh)
-    os.replace(tmp, os.path.join(path, LAYOUT_META))
 
 
 def clean_pending_append(path: str, meta: "dict | None") -> "dict | None":
@@ -419,7 +408,7 @@ def zorder_append(
     )
     staged_meta = dict(meta)
     staged_meta["pending"] = {"id": pid, "files": names}
-    _write_layout_meta(path, staged_meta)
+    write_meta(path, LAYOUT_META, staged_meta)
     for name in names:
         os.rename(os.path.join(stage, name), os.path.join(path, name))
     desc = dict(meta)
@@ -429,20 +418,13 @@ def zorder_append(
     # later append's per_file sizing (ADVICE r10)
     desc["n_files"] = _count_files(path)
     desc.update(extra_meta or {})
-    _write_layout_meta(path, desc)
+    write_meta(path, LAYOUT_META, desc)
     shutil.rmtree(stage, ignore_errors=True)
     return desc
 
 
 def read_layout_meta(path: str) -> "dict | None":
-    import json
-    import os
-
-    p = os.path.join(path, LAYOUT_META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
+    return read_meta(path, LAYOUT_META)
 
 
 def file_span_stats(path: str, cols: list) -> list:

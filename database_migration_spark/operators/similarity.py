@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions.io import read_meta, write_meta
 from database_migration_spark.functions.parallel import fan_out
+
+ANN_META = "_ann_meta.json"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1673,9 +1676,6 @@ def write_ivf_pq_index(
     metadata rule: a prober must never guess the writer's layout
     (cells × dim + m×k×d floats ≈ a few MB at hundreds of cells; store
     the geometry as parquet instead if you train 10⁵+ cells)."""
-    import json
-    import os
-
     import numpy as np
 
     cent = np.asarray(coarse, dtype=np.float64)
@@ -1700,21 +1700,17 @@ def write_ivf_pq_index(
         "codebooks": books.tolist(),
     }
     meta.update(extra or {})
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_ann_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_meta(path, ANN_META, meta)
 
 
 def read_ann_meta(path: str):
     """The stored IVF-PQ geometry of a :func:`write_ivf_pq_index` layout:
     ``(coarse, codebooks)`` numpy arrays."""
-    import json
-    import os
-
     import numpy as np
 
-    with open(os.path.join(path, "_ann_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = read_meta(path, ANN_META)
+    if meta is None:
+        raise FileNotFoundError(f"no ANN index at {path} ({ANN_META} missing)")
     return (
         np.asarray(meta["coarse"], dtype=np.float64),
         np.asarray(meta["codebooks"], dtype=np.float64),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions.io import store_exists
 from database_migration_spark.operators.delta_sync import merge_upsert
 
 
@@ -69,9 +70,7 @@ def stream_merge_upsert(
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
         s = batch.sparkSession
-        import os
-
-        if os.path.exists(target_path):
+        if store_exists(target_path):
             target = s.read.parquet(target_path)
             merged = merge_upsert(target, batch, keys)
         else:
@@ -358,7 +357,6 @@ def stream_scd2(
         publish_partitions,
         read_target_meta,
         resolve_partitions,
-        store_has_partitions,
         write_target_meta,
     )
 
@@ -381,8 +379,6 @@ def stream_scd2(
     def apply(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        import os
-
         from database_migration_spark.operators.scd2 import (
             scd2_bootstrap,
             scd2_merge,
@@ -402,8 +398,7 @@ def stream_scd2(
                 # touched partitions from the batch's keys alone — the
                 # dimension is never scanned to find them
                 affected = affected_partitions(batch, keys, n_pt)
-                exists = store_has_partitions(dim_path)
-                if exists:
+                if store_exists(dim_path):
                     dim = s.read.parquet(dim_path).where(
                         F.col(PT_COL).isin(affected)
                     )
@@ -421,8 +416,7 @@ def stream_scd2(
             finally:
                 batch.unpersist()
             return
-        exists = os.path.exists(dim_path)
-        if exists:
+        if store_exists(dim_path):
             dim = s.read.parquet(dim_path)
             merged = scd2_merge(
                 dim, batch, keys, attrs, ts,
@@ -534,13 +528,11 @@ def fold_incremental_agg(
     ``where n_rows != 0``."""
     if not batch.head(1):
         return False
-    import os
-
     from database_migration_spark.operators import incremental_agg as IA
 
     s = batch.sparkSession
     states = []
-    if os.path.exists(state_path):
+    if store_exists(state_path):
         stored = s.read.parquet(state_path)
         last = stored.select(F.max("_epoch").alias("e")).first()["e"]
         if last is not None and int(epoch_id) <= int(last):
@@ -776,15 +768,12 @@ def stream_cdc_apply(
         pt_expr,
         publish_partitions,
         resolve_partitions,
-        store_has_partitions,
         write_target_meta,
     )
 
     def apply(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        import os
-
         from database_migration_spark.operators.cdc import net_changes
 
         s = batch.sparkSession
@@ -800,12 +789,8 @@ def stream_cdc_apply(
             rows = rows.withColumn(PT_COL, pt_expr(keys, n_pt))
         # partitioned stores write their meta BEFORE the data, so a
         # meta-only directory is an EMPTY store mid-bootstrap, not a
-        # readable dataset — store_has_partitions is the existence test
-        exists = (
-            store_has_partitions(target_path)
-            if n_pt is not None
-            else os.path.exists(target_path)
-        )
+        # readable dataset — store_exists is the existence test
+        exists = store_exists(target_path)
         affected = None
         if n_pt is not None:
             # delta feeds two consumers (affected-partition collect + the
@@ -903,13 +888,9 @@ def compact_cdc_target(
         PT_COL,
         publish_parquet,
         publish_partitions,
-        read_target_meta,
-        store_has_partitions,
     )
 
-    if read_target_meta(target_path) is not None and not store_has_partitions(
-        target_path
-    ):
+    if not store_exists(target_path):
         # a partitioned store can legally be empty (every key deleted and
         # compacted away) — nothing to do, and the parquet read below
         # would fail on the meta-only directory
@@ -917,7 +898,7 @@ def compact_cdc_target(
     t = spark.read.parquet(target_path)
     expired = F.col("_deleted") & (F.col("_seq") < F.lit(int(min_live_seq)))
     before = t.where(F.col("_deleted")).count()
-    partitioned = read_target_meta(target_path) is not None
+    partitioned = PT_COL in t.columns
     if partitioned:
         affected = sorted(
             r[0]
@@ -935,7 +916,7 @@ def compact_cdc_target(
     # and past the horizon): the swap deletes every _pt=* directory and
     # the meta-only dir has no schema to read — report 0, don't crash
     # AFTER the commit (review finding)
-    if partitioned and not store_has_partitions(target_path):
+    if not store_exists(target_path):
         return {"tombstones_before": before, "tombstones_after": 0}
     after = spark.read.parquet(target_path).where(F.col("_deleted")).count()
     return {"tombstones_before": before, "tombstones_after": after}

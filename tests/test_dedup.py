@@ -383,9 +383,9 @@ def test_delete_rows_partitioned_surgical(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from database_migration_spark.functions.io import swap_partition_dirs
     from database_migration_spark.operators.dedup import (
         delete_rows_partitioned,
-        swap_partitions,
     )
 
     path = str(tmp_path / "corpus")
@@ -412,7 +412,7 @@ def test_delete_rows_partitioned_surgical(spark, tmp_path):
     )
     assert res == {"partitions": [3, 4], "rows_deleted": 3, "rows_kept": 13}
 
-    swap_partitions(path, staging, res["partitions"])
+    swap_partition_dirs(path, staging, res["partitions"], "bucket")
     after = spark.read.parquet(path)
     assert after.count() == 61
     assert after.where(F.col("doc_id").isin([3, 11, 20])).count() == 0
@@ -456,9 +456,9 @@ def test_delete_rows_partitioned_full_partition_purge(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from database_migration_spark.functions.io import swap_partition_dirs
     from database_migration_spark.operators.dedup import (
         delete_rows_partitioned,
-        swap_partitions,
     )
 
     path = str(tmp_path / "corpus")
@@ -474,7 +474,9 @@ def test_delete_rows_partitioned_full_partition_purge(spark, tmp_path):
         partition_of=lambda c: F.pmod(c, F.lit(4)),
     )
     assert res == {"partitions": [1], "rows_deleted": 2, "rows_kept": 0}
-    swap_partitions(path, str(tmp_path / "staging"), res["partitions"])
+    swap_partition_dirs(
+        path, str(tmp_path / "staging"), res["partitions"], "bucket"
+    )
     assert not os.path.exists(f"{path}/bucket=1")
     after = spark.read.parquet(path)
     assert after.count() == 6

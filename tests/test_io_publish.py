@@ -1,9 +1,12 @@
-"""publish_parquet protocol tests (functions/io.py): the rename-swap
-publish — round-7 ADVICE: the legacy re-read + overwrite deleted the
-previous generation file-by-file, so a crash mid-overwrite shredded
-read-modify-write state (stream_cdc_apply's _seq fences / tombstones)."""
+"""Store protocol tests (functions/io.py): the rename-swap publish,
+recovery on entry, atomic meta writes, and a crash-point enumeration
+over every mutating filesystem call of each store operation. Round-7
+ADVICE: the legacy re-read + overwrite deleted the previous generation
+file-by-file, so a crash mid-overwrite shredded read-modify-write state
+(stream_cdc_apply's _seq fences / tombstones)."""
 
 import os
+import shutil
 
 import pytest
 
@@ -21,8 +24,7 @@ def test_publish_swaps_and_cleans_up(spark, tmp_path):
     path = _publish(spark, tmp_path, [(1, "a"), (2, "b")])
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "b")}
-    assert not os.path.exists(path + ".stage")
-    assert not os.path.exists(path + ".old")
+    assert os.listdir(tmp_path) == ["t"]  # no staging dir, no aside
 
 
 def test_publish_self_referential_rewrite(spark, tmp_path):
@@ -44,9 +46,13 @@ def test_publish_crash_between_renames_preserves_a_generation(
 ):
     """The crash-window contract: if the process dies after the old
     generation is moved aside but before the new one lands, BOTH
-    generations exist on disk (path+'.old' and the staged copy) — the
-    accumulated state is never shredded mid-write, unlike an overwrite."""
-    from database_migration_spark.functions.io import publish_parquet
+    generations exist on disk (the hidden aside and the staged copy) —
+    the accumulated state is never shredded mid-write, unlike an
+    overwrite — and the next existence test restores the old one."""
+    from database_migration_spark.functions.io import (
+        publish_parquet,
+        store_exists,
+    )
 
     path = _publish(spark, tmp_path, [(1, "gen1")])
     df = spark.createDataFrame([(1, "gen2")], "k INT, v STRING")
@@ -65,10 +71,17 @@ def test_publish_crash_between_renames_preserves_a_generation(
         publish_parquet(df, path, path + ".stage")
     monkeypatch.undo()
     # previous generation recoverable, new generation staged — nothing lost
-    old = {(r.k, r.v) for r in spark.read.parquet(path + ".old").collect()}
+    aside = str(tmp_path / ".t.aside")
+    old = {(r.k, r.v) for r in spark.read.parquet(aside).collect()}
     assert old == {(1, "gen1")}
     staged = {(r.k, r.v) for r in spark.read.parquet(path + ".stage").collect()}
     assert staged == {(1, "gen2")}
+    # recovery on entry: the existence test puts gen1 back in place
+    assert not os.path.exists(path)
+    assert store_exists(path)
+    assert not os.path.exists(aside)
+    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "gen1")}
 
 
 def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
@@ -113,3 +126,361 @@ def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
     assert {(r.k, r.v) for r in spark.read.parquet(local).collect()} == {
         (1, "a")
     }
+
+
+# --- crash-point enumeration ----------------------------------------------
+#
+# The model is the ALICE crash-state enumeration (Pillai et al., "All File
+# Systems Are Not Created Equal", OSDI 2014): record the mutating calls one
+# store operation makes, then crash before the k-th one for every k. The
+# next run must recover (store_exists / recover) and replay the operation
+# to exactly the no-crash result, and an aside must never show up as a
+# table.
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(monkeypatch, root, k):
+    """Wrap the four mutating calls for paths under ``root``: record each,
+    and raise before the ``k``-th (k=0 never raises). Returns the record."""
+    calls = []
+    for mod, name in (
+        (os, "rename"), (os, "replace"), (shutil, "rmtree"), (shutil, "move")
+    ):
+        real = getattr(mod, name)
+
+        def wrapped(src, *a, _real=real, _name=name, **kw):
+            if str(src).startswith(root):
+                calls.append((_name, str(src)))
+                if len(calls) == k:
+                    raise _Crash(f"crash before {_name}({src})")
+            return _real(src, *a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+    return calls
+
+
+def _enumerate(monkeypatch, root, setup, op, state, replay=None):
+    """Run ``op`` once to count its calls and take the no-crash ``state``;
+    then, for every k, reset with ``setup``, crash ``op`` before call k,
+    and check that ``replay`` (default: ``op``) lands the same state.
+    Returns the number of crash points."""
+    from database_migration_spark.sources.parquet_source import ParquetSource
+
+    setup()
+    with monkeypatch.context() as m:
+        calls = _crash_at(m, root, 0)
+        op()
+    want = state()
+    assert calls, "the operation made no mutating call"
+    for k in range(1, len(calls) + 1):
+        setup()
+        with monkeypatch.context() as m:
+            _crash_at(m, root, k)
+            with pytest.raises(_Crash):
+                op()
+        # a moved-aside generation is never listed as a table
+        tables = ParquetSource(None, root).list_tables()
+        assert not any(t.endswith((".aside", ".trash")) for t in tables)
+        (replay or op)()
+        assert state() == want, f"crash before call {k}: {calls[k - 1]}"
+    return len(calls)
+
+
+def _tree(path):
+    """Relative file path -> content for every file under ``path``."""
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p) as fh:
+                out[os.path.relpath(p, path)] = fh.read()
+    return out
+
+
+def test_swap_dir_crash_points_plain_dirs(tmp_path, monkeypatch):
+    """swap_dir on plain directories (no Spark): a replace, and a delete
+    (absent src). Every crash point recovers to one generation, never a
+    mix, and the replay lands the new one."""
+    from database_migration_spark.functions.io import recover, swap_dir
+
+    root = str(tmp_path)
+    dst, src = os.path.join(root, "d"), os.path.join(root, "d.stage")
+
+    def write(d, files):
+        os.makedirs(d, exist_ok=True)
+        for n, v in files.items():
+            with open(os.path.join(d, n), "w") as fh:
+                fh.write(v)
+
+    gen1 = {"a": "1", "b": "1"}
+    gen2 = {"a": "2", "c": "2"}
+    for new in (gen2, None):  # None: the delete case
+
+        def setup():
+            for e in os.listdir(root):
+                shutil.rmtree(os.path.join(root, e))
+            write(dst, gen1)
+            if new is not None:
+                write(src, new)
+
+        def replay():
+            recover(dst)
+            # recovery leaves dst at exactly one generation; it is absent
+            # only once a delete has committed
+            if os.path.exists(dst):
+                assert _tree(dst) in (gen1, new)
+            else:
+                assert new is None
+            if new is not None:
+                shutil.rmtree(src, ignore_errors=True)
+                write(src, new)
+            swap_dir(src, dst)
+
+        def state():
+            return _tree(dst) if os.path.exists(dst) else None, sorted(
+                os.listdir(root)
+            )
+
+        n = _enumerate(
+            monkeypatch, root, setup, lambda: swap_dir(src, dst), state, replay
+        )
+        assert n == (3 if new is not None else 2)
+        assert state() == ((gen2, ["d"]) if new is not None else (None, []))
+
+
+def _kv(spark, path):
+    return sorted(
+        (r.k, r.v) for r in spark.read.parquet(path).select("k", "v").collect()
+    )
+
+
+def test_publish_parquet_crash_points_replay(spark, tmp_path, monkeypatch):
+    """A read-modify-write publish (upsert one key) crashed before every
+    mutating call, then recovered and replayed, equals the no-crash
+    result — the replay never mistakes a moved-aside target for an empty
+    one."""
+    from database_migration_spark.functions.io import (
+        publish_parquet,
+        store_exists,
+    )
+    from database_migration_spark.operators.delta_sync import merge_upsert
+
+    root = str(tmp_path / "lake")
+    path = os.path.join(root, "t")
+    pristine = str(tmp_path / "pristine")
+    spark.createDataFrame(
+        [(k, "gen1") for k in range(8)], "k INT, v STRING"
+    ).write.parquet(pristine)
+    delta = spark.createDataFrame([(3, "gen2")], "k INT, v STRING")
+
+    def setup():
+        shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root)
+        shutil.copytree(pristine, path)
+
+    def op():
+        base = (
+            spark.read.parquet(path) if store_exists(path)
+            else delta.limit(0)
+        )
+        publish_parquet(merge_upsert(base, delta, ["k"]), path, path + ".stage")
+
+    n = _enumerate(monkeypatch, root, setup, op, lambda: _kv(spark, path))
+    assert n == 3  # aside rename, commit rename, aside drop
+    assert _kv(spark, path) == [
+        (k, "gen2" if k == 3 else "gen1") for k in range(8)
+    ]
+    assert os.listdir(root) == ["t"]
+
+
+def test_publish_partitions_crash_points_replay(spark, tmp_path, monkeypatch):
+    """A partition-surgical read-modify-write (delete every key of one
+    partition, update a key of another) crashed before every mutating
+    call, then recovered and replayed, equals the no-crash result."""
+    from pyspark.sql import functions as F
+
+    from database_migration_spark.functions.io import (
+        PT_COL,
+        pt_expr,
+        publish_partitions,
+        store_exists,
+        write_target_meta,
+    )
+
+    root = str(tmp_path / "lake")
+    path = os.path.join(root, "t")
+    pristine = str(tmp_path / "pristine")
+    rows = spark.createDataFrame(
+        [(k, "gen1") for k in range(16)], "k INT, v STRING"
+    ).withColumn(PT_COL, pt_expr(["k"], 4))
+    rows.write.partitionBy(PT_COL).parquet(pristine)
+    write_target_meta(pristine, ["k"], 4)
+    pt = dict(rows.select("k", PT_COL).collect())
+    gone = pt[0]  # every key of this partition is deleted
+    upd = next(k for k in range(16) if pt[k] != gone)
+    affected = sorted({gone, pt[upd]})
+
+    def setup():
+        shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root)
+        shutil.copytree(pristine, path)
+
+    def op():
+        assert store_exists(path)
+        cur = spark.read.parquet(path).where(F.col(PT_COL).isin(affected))
+        merged = cur.where(F.col(PT_COL) != gone).withColumn(
+            "v", F.when(F.col("k") == upd, "gen2").otherwise(F.col("v"))
+        )
+        publish_partitions(merged, path, path + ".stage", affected)
+
+    n = _enumerate(monkeypatch, root, setup, op, lambda: _kv(spark, path))
+    # per partition: trash rename + drop (delete) or aside rename, commit
+    # rename, aside drop (replace); then the staging drop
+    assert n == 2 + 3 + 1
+    assert _kv(spark, path) == sorted(
+        (k, "gen2" if k == upd else "gen1") for k in range(16) if pt[k] != gone
+    )
+    assert not any(e.endswith((".aside", ".trash")) for e in os.listdir(path))
+
+
+def test_write_meta_crash_keeps_previous_meta(tmp_path, monkeypatch):
+    """write_meta is atomic: a crash at its os.replace while it
+    overwrites an existing _index_meta.json leaves the previous dict
+    readable, and a successful write leaves no temp file behind."""
+    from database_migration_spark.functions.io import write_meta
+    from database_migration_spark.operators.dedup import (
+        INDEX_META,
+        read_index_meta,
+    )
+
+    root = str(tmp_path)
+    path = os.path.join(root, "ix")
+    old = {"num_perm": 32, "bands": 4, "buckets": 8}
+    new = {"num_perm": 64, "bands": 8, "buckets": 16}
+
+    def setup():
+        shutil.rmtree(path, ignore_errors=True)
+        write_meta(path, INDEX_META, old)
+
+    def op():
+        write_meta(path, INDEX_META, new)
+
+    def replay():
+        assert read_index_meta(path) == old  # the crash kept it intact
+        op()
+
+    n = _enumerate(
+        monkeypatch, root, setup, op, lambda: read_index_meta(path), replay
+    )
+    assert n == 1  # the os.replace
+    assert read_index_meta(path) == new
+    assert os.listdir(path) == [INDEX_META]
+
+
+# --- regression: replay after a crashed commit loses no rows ----------------
+
+
+def _feed(spark, root, rows):
+    spark.createDataFrame(
+        rows, "k LONG, v STRING, seq LONG, op STRING"
+    ).write.parquet(f"{root}/events.parquet")
+    return root
+
+
+def _crash_renames_into(monkeypatch, pred):
+    """Make the first os.rename / shutil.move with ``pred(src, dst)`` raise."""
+    fired = []
+    for mod, name in ((os, "rename"), (shutil, "move")):
+        real = getattr(mod, name)
+
+        def wrapped(src, dst, *a, _real=real, **kw):
+            if not fired and pred(str(src), str(dst)):
+                fired.append((src, dst))
+                raise OSError("simulated crash")
+            return _real(src, dst, *a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+
+
+@pytest.mark.parametrize("partitions", [None, 4])
+def test_cli_cdc_replay_after_crashed_commit_keeps_every_row(
+    spark, tmp_path, monkeypatch, capsys, partitions
+):
+    """CLI ``cdc``: a crash inside the commit of a 1-row feed, then a
+    replay of the same feed, keeps all 40 rows. Unpartitioned, the crash
+    lands at the commit rename (the target is moved aside); with
+    ``--partitions 4`` it lands after a touched partition left its place
+    and before the staged one arrived. Without recovery on entry the
+    replay read the target (or that partition) as empty and rewrote it
+    with the delta rows only: 1 of 40 rows, or 32 of 40."""
+    from database_migration_spark.__main__ import main
+
+    ev0 = _feed(spark, str(tmp_path / "ev0"),
+                [(k, f"v{k}", 10, "I") for k in range(40)])
+    ev1 = _feed(spark, str(tmp_path / "ev1"), [(7, "v7b", 20, "U")])
+    tgt = str(tmp_path / "tgt")
+    part = [] if partitions is None else ["--partitions", str(partitions)]
+    cdc = ["cdc", "--target", tgt, "--keys", "k"]
+    assert main(cdc + ["--events", ev0] + part) == 0
+    capsys.readouterr()
+
+    stage = tgt + ".cdc-tmp"
+    if partitions is None:
+        crash = lambda src, dst: dst == tgt  # noqa: E731
+    else:
+        crash = lambda src, dst: src.startswith(stage + os.sep)  # noqa: E731
+    with monkeypatch.context() as m:
+        _crash_renames_into(m, crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            main(cdc + ["--events", ev1])
+    capsys.readouterr()
+    assert main(cdc + ["--events", ev1]) == 0
+    assert "target now has 40 rows" in capsys.readouterr().out
+    want = {k: f"v{k}" for k in range(40)}
+    want[7] = "v7b"
+    got = spark.read.parquet(tgt).collect()
+    assert {r.k: r.v for r in got} == want and len(got) == 40
+
+
+def test_stream_merge_upsert_replay_after_crashed_commit(
+    spark, tmp_path, monkeypatch
+):
+    """stream_merge_upsert: epoch 0 writes {1:a, 2:b, 3:c}; epoch 1
+    ({2:B}) crashes at its commit rename; the restart from the checkpoint
+    replays epoch 1 against the recovered target and lands
+    {1:a, 2:B, 3:c} (it used to land {2:B}: the replay saw no target)."""
+    from database_migration_spark.streaming.delta_stream import (
+        stream_merge_upsert,
+    )
+
+    schema = "id LONG, v STRING"
+    src, target = tmp_path / "src", str(tmp_path / "target")
+    ck = str(tmp_path / "ck")
+
+    def run():
+        q = stream_merge_upsert(
+            spark.readStream.schema(schema).parquet(str(src) + "/*"),
+            target, ["id"], ck,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], schema
+    ).coalesce(1).write.parquet(str(src / "b0"))
+    run()
+    spark.createDataFrame([(2, "B")], schema).coalesce(1).write.parquet(
+        str(src / "b1")
+    )
+    with monkeypatch.context() as m:
+        _crash_renames_into(m, lambda s, d: d == target)
+        with pytest.raises(Exception, match="simulated crash"):
+            run()
+    run()  # the restart replays the uncommitted epoch 1
+    got = {r.id: r.v for r in spark.read.parquet(target).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}

@@ -413,14 +413,14 @@ def test_zorder_append_crash_before_pending_meta(spark, tmp_path,
     path = _small_layout(spark, tmp_path)
     before = L.read_layout_meta(path)
 
-    real = L._write_layout_meta
+    real = L.write_meta
 
-    def boom(p, desc):
+    def boom(p, name, desc):
         if "pending" in desc:
             raise OSError("simulated crash before pending commit")
-        return real(p, desc)
+        return real(p, name, desc)
 
-    monkeypatch.setattr(L, "_write_layout_meta", boom)
+    monkeypatch.setattr(L, "write_meta", boom)
     with pytest.raises(OSError, match="pending commit"):
         L.zorder_append(_batch(spark), path, pending_id="e1")
     monkeypatch.undo()
@@ -443,17 +443,17 @@ def test_zorder_append_crash_between_rename_and_commit(spark, tmp_path,
     from database_migration_spark.operators import layout as L
 
     path = _small_layout(spark, tmp_path)
-    real = L._write_layout_meta
+    real = L.write_meta
     calls = {"n": 0}
 
-    def boom(p, desc):
+    def boom(p, name, desc):
         if "pending" not in desc:
             calls["n"] += 1
             if calls["n"] == 1:  # the final commit of THIS append
                 raise OSError("simulated crash before final commit")
-        return real(p, desc)
+        return real(p, name, desc)
 
-    monkeypatch.setattr(L, "_write_layout_meta", boom)
+    monkeypatch.setattr(L, "write_meta", boom)
     with pytest.raises(OSError, match="final commit"):
         L.zorder_append(_batch(spark), path, pending_id="e2")
     monkeypatch.undo()

@@ -1374,9 +1374,7 @@ def test_compact_cdc_target_emptied_store_reports_instead_of_crashing(
     # compaction that expires EVERY row (all keys deleted, horizon past)
     # legally empties a partitioned store — it must report counts, not
     # crash reading the meta-only directory after the commit
-    from database_migration_spark.functions.io import (
-        store_has_partitions,
-    )
+    from database_migration_spark.functions.io import store_exists
     from database_migration_spark.streaming.delta_stream import (
         compact_cdc_target,
         stream_cdc_apply,
@@ -1397,7 +1395,7 @@ def test_compact_cdc_target_emptied_store_reports_instead_of_crashing(
     q.processAllAvailable(); q.stop()
     res = compact_cdc_target(spark, target, min_live_seq=10)
     assert res == {"tombstones_before": 2, "tombstones_after": 0}
-    assert not store_has_partitions(target)
+    assert not store_exists(target)
     # idempotent on the now-empty store
     res2 = compact_cdc_target(spark, target, min_live_seq=10)
     assert res2 == {"tombstones_before": 0, "tombstones_after": 0}
@@ -1527,13 +1525,13 @@ def test_zorder_epoch_replay_after_crash_no_double_write(
     )
     _zorder_epoch(mk(0), 0, layout, ckpt, ["u", "e"], None, 4)
 
-    real = L._write_layout_meta
-    def boom(p, desc):
+    real = L.write_meta
+    def boom(p, name, desc):
         if "pending" not in desc:
             raise OSError("simulated crash before final commit")
-        return real(p, desc)
+        return real(p, name, desc)
 
-    monkeypatch.setattr(L, "_write_layout_meta", boom)
+    monkeypatch.setattr(L, "write_meta", boom)
     import pytest as _pt
     with _pt.raises(OSError, match="final commit"):
         _zorder_epoch(mk(10_000), 1, layout, ckpt, None, None, 4)
